@@ -4,37 +4,24 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Round-13 optimization plan-evidence generator. The two structural
-  * changes of the round live in SIDE EFFECTS (a merge's internal rewrite
-  * join; a streaming drain's state partitioning), so a plain
-  * `.explain()` of any declared query's returned frame cannot show them.
-  * This main produces the checkable artifacts instead:
+/** Plan-evidence generator for effects that live in SIDE EFFECTS (a
+  * streaming drain's state partitioning, the CC loop's per-round
+  * frontier), which a plain `.explain()` of any declared query's returned
+  * frame cannot show. Merge strategy decisions need no generator: every
+  * MERGE commit records them in its `operationMetrics` (see
+  * `VersionedTable.history`).
   *
-  *  1. Merge rewrite plans: runs the q25-shaped header SCD2 fixture and
-  *     the q24-shaped items fixture with `spark.graft.merge.explainDir`
-  *     set, so every merge dumps its rewrite join's formatted plan
-  *     (join strategy, source subtree — cached vs replayed).
-  *  2. Streaming state partitioning: runs the real q57/q60 queries, then
+  *  1. Streaming state partitioning: runs the real q57/q60 queries, then
   *     counts the state-partition dirs their checkpoints created
   *     (`state/0/<partition>/`) BEFORE cache release deletes them —
   *     the direct record of how many state stores each micro-batch pays.
-  *
-  * Round-14 additions (same artifact-generator role):
-  *  3. mode `cc` — runs q28/q40 with `spark.graft.cc.roundLogDir` set and
+  *  2. mode `cc` — runs q28/q40 with `spark.graft.cc.roundLogDir` set and
   *     copies out the per-round frontier sizes (round, changed-count), the
   *     direct record that the CC propagation join's input shrinks round
   *     over round under the early-frontier rewrite.
-  *  4. mode `etl5m` — the header job at 5M rows TWICE: once with
-  *     `spark.graft.merge.broadcastSourceBytes=0` (measured-size hint OFF —
-  *     Catalyst/AQE decide from estimates, the pre-r13 behavior) and once
-  *     at the shipped default, dumping each merge's rewrite plan. This is
-  *     the scale point the r13 verdict asked for, where the optimizer's
-  *     10 MB estimate cap stops firing and the hint visibly changes the
-  *     plan. Wall time of each merge phase is recorded alongside.
   *
-  * Usage: runMain graft.PlanEvidence <sfDir> <outDir> <suffix> [mode]
-  * (mode `cc`/`etl5m` runs ONLY that section; `etl1m` additionally runs
-  * the 1M header dumps before the default fixture/streaming sections)
+  * Usage: runMain graft.PlanEvidence <sfDir> <outDir> <suffix> [cc]
+  * (mode `cc` runs ONLY that section)
   */
 object PlanEvidence {
   def main(args: Array[String]): Unit = {
@@ -43,18 +30,16 @@ object PlanEvidence {
     val mode = if (args.length > 3) args(3) else ""
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     Files.createDirectories(Paths.get(outDir))
-    val mergePlansDir = s"$outDir/.merge_plans_$suffix"
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.graft.merge.explainDir", mergePlansDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.tune(spark)
 
-    // ---- mode cc: per-round CC frontier sizes (round 14, task 1) -------
+    // ---- mode cc: per-round CC frontier sizes ------------------------
     if (mode == "cc") {
       Seq("q28_dedup_clusters", "q40_cc_chain").foreach { q =>
         val d = Files.createTempDirectory("graft-ccrounds").toString
@@ -76,89 +61,7 @@ object PlanEvidence {
       return
     }
 
-    // ---- mode etl<N>m / etl<N>k: measured-size broadcast hint at N
-    // million (or thousand) header rows (task 5). The hint only fires
-    // when the source's MATERIALIZED cache size ≤ the 128 MB cap, and
-    // Catalyst's own estimate already broadcasts small sources — so the
-    // plan-visible window is the size band where the estimate is past
-    // the 10 MB autoBroadcast threshold but the true cached size is
-    // still under the cap. Parameterized so that band can be probed.
-    val EtlSize = "etl(\\d+)([mk])".r
-    mode match { case EtlSize(num, unit) =>
-      val nRows = num.toLong * (if (unit == "m") 1000000L else 1000L)
-      val w = Files.createTempDirectory(s"graft-evidence-$mode").toString
-      tools.HeaderDataGen.writeBatch1(spark, nRows, "20230127", s"$w/crm",
-        cpus.toInt, seed = 42)
-      tools.HeaderDataGen.writeBatch2(spark, nRows, "20230228", s"$w/crm",
-        cpus.toInt, seed = 43, existingCount = nRows, pctNew = 50.0)
-      val timings = scala.collection.mutable.ArrayBuffer[String]()
-      Seq("hintoff" -> "0", "hinton" -> (128L * 1024 * 1024).toString)
-        .foreach { case (tag, capBytes) =>
-          spark.conf.set("spark.graft.merge.broadcastSourceBytes", capBytes)
-          val t = s"$w/table_$tag"
-          jobs.HeaderEtlJob.run(spark, s"$w/crm/header_20230127.csv",
-            t, s"$w/discarded_$tag", s"$w/metrics_$tag")
-          val m = jobs.HeaderEtlJob.run(spark, s"$w/crm/header_20230228.csv",
-            t, s"$w/discarded_$tag", s"$w/metrics_$tag")
-          timings += s"$tag: batch2 total ${m.duration_s}s merge ${m.duration_s_merge}s " +
-            s"(inserted ${m.inserted_count}, closed ${m.closed_count})"
-          Option(new java.io.File(mergePlansDir).listFiles())
-            .getOrElse(Array.empty).foreach { f =>
-              Files.move(f.toPath,
-                Paths.get(outDir, s"merge_${mode}_${tag}_${f.getName.stripSuffix(".txt")}_$suffix.txt"),
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            }
-        }
-      spark.conf.unset("spark.graft.merge.broadcastSourceBytes")
-      Files.writeString(Paths.get(s"$outDir/merge_${mode}_timings_$suffix.txt"),
-        s"== header batch2 at $nRows rows, broadcast hint off vs on ($suffix) ==\n" +
-          timings.mkString("\n") + "\n")
-      timings.foreach(println)
-      GraftSession.deleteRec(new java.io.File(w))
-      GraftSession.deleteRec(new java.io.File(mergePlansDir))
-      spark.stop()
-      return
-    case _ => }
-
-    // ---- 1. merge rewrite plans (header q25 fixture, items q24 fixture).
-    // With mode=etl1m the header job also runs at 1M generated rows:
-    // fixture-scale plans mask the join-strategy difference (Catalyst's
-    // EliminateOuterJoin already narrows a no-insert full-outer whose
-    // downstream filter is target-null-rejecting, and a 5-row source
-    // broadcasts under any policy) — the source-persist and
-    // measured-size-broadcast effects only show at volume.
-    if (args.length > 3 && mode == "etl1m") {
-      val w = Files.createTempDirectory("graft-evidence-etl").toString
-      tools.HeaderDataGen.writeBatch1(spark, 1000000, "20230127", s"$w/crm",
-        cpus.toInt, seed = 42)
-      tools.HeaderDataGen.writeBatch2(spark, 1000000, "20230228", s"$w/crm",
-        cpus.toInt, seed = 43, existingCount = 1000000, pctNew = 50.0)
-      jobs.HeaderEtlJob.run(spark, s"$w/crm/header_20230127.csv",
-        s"$w/table", s"$w/discarded", s"$w/metrics")
-      jobs.HeaderEtlJob.run(spark, s"$w/crm/header_20230228.csv",
-        s"$w/table", s"$w/discarded", s"$w/metrics")
-      GraftSession.deleteRec(new java.io.File(w))
-      // rename the 1M dumps so they don't collide with the fixture ones
-      Option(new java.io.File(mergePlansDir).listFiles()).getOrElse(Array.empty)
-        .foreach { f =>
-          Files.move(f.toPath,
-            Paths.get(mergePlansDir, "etl1m_" + f.getName),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-    }
-    SparkEntry.queries("q25_header_scd2")(spark, sfDir).count()
-    SparkEntry.queries("q24_items_scd2")(spark, sfDir).count()
-    // copy out each dumped merge plan under a stable name
-    val dumped = Option(new java.io.File(mergePlansDir).listFiles()).getOrElse(Array.empty)
-    dumped.sortBy(_.getName).foreach { f =>
-      Files.copy(f.toPath,
-        Paths.get(s"$outDir/merge_${f.getName.stripSuffix(".txt")}_$suffix.txt"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    GraftSession.deleteRec(new java.io.File(mergePlansDir))
-    graft.ops.Caches.releaseAll()
-
-    // ---- 2. streaming state partition counts (real q57 + q60 runs) ----
+    // ---- streaming state partition counts (real q57 + q60 runs) ----
     def statePartitionDirs(tmpPrefix: String): Seq[(String, Int)] = {
       val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
       Option(tmp.listFiles()).getOrElse(Array.empty)

@@ -1,9 +1,7 @@
 package graft.jobs
 
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
-
 import graft.core.Schemas
+import graft.jobs.EtlSupport.{lastMetric, metric, secondsSince}
 import graft.ops.{DqMetrics, Validation}
 import graft.tables.VersionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -90,10 +88,7 @@ object HeaderEtlJob {
           lateSplit: Boolean = false): HeaderRunMetrics = {
     val t0 = System.nanoTime()
     val filename = readPath.split("/").last
-    // driver-side batch id (reference computes the same value through the
-    // cluster: src/header_etl.py:70-73)
-    val batchId = DateTimeFormatter.ofPattern("yyyyMMddHHmmss")
-      .withZone(ZoneOffset.UTC).format(Instant.now()) + "_" + filename
+    val batchId = EtlSupport.batchId(filename)
 
     // ---- EXTRACT (reference: src/header_etl.py:64-73) ------------------
     val tExtract0 = System.nanoTime()
@@ -171,7 +166,7 @@ object HeaderEtlJob {
       dq_duplicates_older = dq.duplicatesOlder,
       dq_null_key = dq.nullKey,
       dq_batch_date_mismatch = dq.batchDateMismatch)
-    writeMetrics(spark, metrics, s"$metricsPath/$batchId")
+    EtlSupport.writeRunMetrics(metrics, s"$metricsPath/$batchId")
     metrics
   }
 
@@ -207,13 +202,6 @@ object HeaderEtlJob {
       .withColumn("creazione_dta_parsed",
         expr("coalesce(to_date(creazione_dta_raw, 'M/d/yyyy'), to_date(creazione_dta_raw, 'yyyy-MM-dd'))"))
   }
-
-  /** One operationMetrics value from the table's latest commit. */
-  private def lastMetric(table: VersionedTable, key: String): Long =
-    table.history(1).select("operationMetrics")
-      .collect().headOption
-      .flatMap(_.getAs[Map[String, String]](0).get(key))
-      .map(_.toLong).getOrElse(-1L)
 
   /** The two-phase SCD2 merge (init if absent, Phase A close-on-change
     * once per key, Phase B idempotent insert — reference:
@@ -277,7 +265,7 @@ object HeaderEtlJob {
     val firstChange = changedEvents.groupBy("contratto_cod")
       .agg(min("valid_from_ts").as("first_change_ts"))
 
-    table.alias("existing")
+    val phaseA = table.alias("existing")
       .merge(firstChange.alias("min_staged"),
         "existing.contratto_cod = min_staged.contratto_cod")
       .whenMatchedUpdate(
@@ -288,18 +276,18 @@ object HeaderEtlJob {
           "is_current" -> "false",
           "closed_by_batch" -> s"'$batchId'"))
       .execute()
-    val closed = lastMetric(table, "numTargetRowsUpdated")
+    val closed = metric(phaseA, "numTargetRowsUpdated")
 
     // -- Phase B: idempotent insert of all version rows ------------------
     // (reference: src/header_etl.py:219-280)
     val staged = stagedForInsert.selectExpr(StagedColumns: _*)
-    table.alias("existing")
+    val phaseB = table.alias("existing")
       .merge(staged.alias("staged"),
         "existing.contratto_cod = staged.contratto_cod AND existing.valid_from_ts = staged.valid_from_ts")
       .whenNotMatchedInsert(values =
         StagedColumns.map(c => c -> s"staged.$c").toMap)
       .execute()
-    val insertedB = lastMetric(table, "numTargetRowsInserted")
+    val insertedB = metric(phaseB, "numTargetRowsInserted")
 
     val inserted =
       if (initRows < 0 || insertedB < 0) -1L else initRows + insertedB
@@ -374,25 +362,4 @@ object HeaderEtlJob {
       .withColumn("is_current", col("is_current") && col("next_ex_from").isNull)
       .drop("next_ex_from")
   }
-
-  /** Run-metrics CSV sink, one dir per batch, append semantics with
-    * header (reference: src/header_etl.py:338-340). Written DRIVER-SIDE:
-    * the previous `Seq(m).toDF().coalesce(1).write.csv` paid a full Spark
-    * job (plan + schedule + task + commit protocol) for ONE row inside
-    * every batch — pure fixed overhead (guide §5: the driver should do no
-    * data work, and symmetrically one row is driver work, not a cluster
-    * job). Same on-disk layout: a per-batch dir holding one headered
-    * part file; none of the values need CSV quoting (no separators or
-    * newlines in batch ids / app ids / numbers). */
-  private def writeMetrics(spark: SparkSession, m: HeaderRunMetrics, path: String): Unit = {
-    val dir = java.nio.file.Paths.get(path)
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.writeString(
-      dir.resolve(s"part-00000-${java.util.UUID.randomUUID()}.csv"),
-      m.productElementNames.mkString(",") + "\n" +
-        m.productIterator.mkString(",") + "\n")
-  }
-
-  private def secondsSince(nanos: Long): Double =
-    (System.nanoTime() - nanos) / 1e9
 }

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.core.Schemas
+import graft.jobs.EtlSupport.{lastMetric, metric, secondsSince}
 import graft.tables.VersionedTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
@@ -64,18 +65,17 @@ object ItemsEtlJob {
     * `metricsPath` is given, appends the row as a one-line header CSV
     * under `metricsPath/<batch_id>` (the header job's metrics-sink
     * shape — reference logs these values, src/items_etl.py:57-61).
-    * `collectCounts = false` skips the staged-count action and the
-    * commit-metrics history reads (those fields read -1) — the plain
-    * [[run]] entry point uses it so correctness replays and tests
-    * don't pay ~0.6 s of accounting-only driver jobs per batch. */
+    * `collectCounts = false` skips the staged-count action and the init
+    * write's commit-metrics read (those fields read -1; a merge returns
+    * its counts for free) — the plain [[run]] entry point uses it so
+    * correctness replays and tests don't pay accounting-only driver
+    * jobs per batch. */
   def runWithMetrics(spark: SparkSession, readPath: String, writePath: String,
                      metricsPath: Option[String] = None,
                      collectCounts: Boolean = true): ItemsRunMetrics = {
     val t0 = System.nanoTime()
     val filename = readPath.split("/").last
-    val batchId = java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmss")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.now()) + "_" + filename
+    val batchId = EtlSupport.batchId(filename)
 
     // ---- EXTRACT (reference: src/items_etl.py:49-52) -------------------
     val tExtract0 = System.nanoTime()
@@ -161,7 +161,7 @@ object ItemsEtlJob {
         .union(dfTransformed.selectExpr(
           "contratto_cod as mergeKey", "numero_annuncio as mergeKey2", "*"))
 
-      table.alias("existing")
+      val merged = table.alias("existing")
         .merge(stagedUpdates.alias("staged_updates"),
           "existing.contratto_cod = mergeKey AND existing.numero_annuncio = mergeKey2")
         .whenMatchedUpdate(
@@ -173,10 +173,7 @@ object ItemsEtlJob {
         .whenNotMatchedInsert(values =
           InsertColumns.map(c => c -> s"staged_updates.$c").toMap)
         .execute()
-      if (collectCounts)
-        (lastMetric(table, "numTargetRowsInserted"),
-          lastMetric(table, "numTargetRowsUpdated"))
-      else (-1L, -1L)
+      (metric(merged, "numTargetRowsInserted"), metric(merged, "numTargetRowsUpdated"))
     }
     val durMerge = secondsSince(tMerge0)
 
@@ -192,28 +189,8 @@ object ItemsEtlJob {
       inserted_count = insertedCount,
       closed_count = closedCount,
       spark_app_id = spark.sparkContext.applicationId)
-    // driver-side one-row CSV (same layout as the former
-    // df.coalesce(1).write.csv dir): a Spark job per single metrics row
-    // was pure fixed overhead inside the batch (guide §5)
-    metricsPath.foreach { p =>
-      val dir = java.nio.file.Paths.get(s"$p/$batchId")
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.writeString(
-        dir.resolve(s"part-00000-${java.util.UUID.randomUUID()}.csv"),
-        metrics.productElementNames.mkString(",") + "\n" +
-          metrics.productIterator.mkString(",") + "\n")
-    }
+    metricsPath.foreach(p => EtlSupport.writeRunMetrics(metrics, s"$p/$batchId"))
     metrics
     } finally flagged.unpersist(false)
   }
-
-  /** One operationMetrics value from the table's latest commit. */
-  private def lastMetric(table: VersionedTable, key: String): Long =
-    table.history(1).select("operationMetrics")
-      .collect().headOption
-      .flatMap(_.getAs[Map[String, String]](0).get(key))
-      .map(_.toLong).getOrElse(-1L)
-
-  private def secondsSince(nanos: Long): Double =
-    (System.nanoTime() - nanos) / 1e9
 }

@@ -299,7 +299,7 @@ class VersionedTable private (val spark: SparkSession,
     * publishes at its end, so on a [[ConcurrentCommitException]] the
     * operation is simply re-run against the winner's new table state —
     * re-snapshot, re-rewrite, re-CAS — up to
-    * `spark.graft.commit.maxRetries` times (default 3, 0 disables).
+    * `spark.graft.commit.maxRetries` times (default 10, 0 disables).
     * Physically-conflicting writers (same keys, same files) stay correct
     * under this loop because each retry rewrites from the committed
     * state; it is the CONCURRENCY discipline that is optimistic, not the
@@ -1536,6 +1536,11 @@ class VersionedTable private (val spark: SparkSession,
   def merge(source: DataFrame, condition: String): MergeBuilder =
     new MergeBuilder(this, aliasName.getOrElse("existing"), source, condition)
 
+  /** Runs one MERGE and returns the `operationMetrics` its commit
+    * recorded: the row/file counts plus the strategy decisions
+    * (`sourcePersisted`, `sourceBroadcast`, `cardinalityCheck`, and
+    * `rewriteJoinType` on rewriting merges), so `history()` is the audit
+    * trail of every merge's plan choices. */
   private[tables] def executeMerge(targetAlias: String,
                                    source: DataFrame,
                                    condition: String,
@@ -1543,37 +1548,39 @@ class VersionedTable private (val spark: SparkSession,
                                    notMatchedInsert: Option[(Option[String], Map[String, String])],
                                    matchedDelete: Option[Option[String]] = None,
                                    deleteFirst: Boolean = false,
-                                   schemaEvolution: Boolean = false): Unit = {
+                                   schemaEvolution: Boolean = false): Map[String, String] = {
     // The source is consumed 2-3 times (stats/cardinality agg, file-prune
     // join, then the rewrite or anti join) — persist it so the lineage
-    // runs once. GUARDED (guide §5: caching competes with execution
-    // memory): only a plan with a join/aggregate/window/generate above
-    // its scans is worth a second materialization. The common cheap
-    // shape — a projection over the caller's ALREADY-CACHED batch (the
-    // header job's Phase-B staging) — previously got persisted here
-    // unconditionally, writing a second full copy of the batch to
-    // storage memory per merge; re-running a projection over the
-    // existing cache costs less than that copy. Non-deterministic
-    // sources are persisted regardless of shape: re-evaluating one
-    // across the probe/rewrite passes would let the probe and the
-    // rewrite see DIFFERENT rows. try/finally: any failure must still
-    // release the cached blocks. The retry loop sits INSIDE the persist
-    // scope: a CAS-losing merge re-runs reusing the cached source.
-    val srcExpensive = {
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, Window => LWindow}
-      val plan = source.queryExecution.analyzed
-      plan.exists {
-        case _: Join | _: Aggregate | _: LWindow | _: Generate => true
+    // runs once. This is the merge's ONE persist decision, taken on the
+    // plan ABOVE the caller's caches (guide §5: caching competes with
+    // execution memory): only a join/aggregate/window/generate there is
+    // worth a second materialization (Distinct, Deduplicate, Intersect and
+    // Except are the pre-optimizer forms of aggregates and joins, so they
+    // count too). SCD2 merge sources typically are
+    // one — a join/aggregate over the target table itself (the header
+    // job's Phase-A first-change frame, the items job's staged union).
+    // A projection over the caller's already-cached batch (the header
+    // job's Phase-B staging) is replayed instead of copied: its analyzed
+    // plan still shows the Window under the cache, its cached-data plan
+    // does not. Non-deterministic sources are persisted regardless of
+    // shape: re-evaluating one across the probe/rewrite passes would let
+    // the probe and the rewrite see DIFFERENT rows. The retry loop sits
+    // INSIDE the persist scope (a CAS-losing merge re-runs on the cached
+    // source), and try/finally releases the cache on every exit path.
+    val persist = source.storageLevel == StorageLevel.NONE && {
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Distinct,
+        Generate, Join, SetOperation, Window => LWindow}
+      source.queryExecution.withCachedData.exists {
+        case _: Join | _: Aggregate | _: LWindow | _: Generate |
+             _: Distinct | _: Deduplicate | _: SetOperation => true
         case other => !other.deterministic
       }
     }
-    val doPersist = srcExpensive && source.storageLevel == StorageLevel.NONE &&
-      spark.conf.get("spark.graft.merge.persistSource", "true") != "false"
-    val src = if (doPersist) source.persist(StorageLevel.MEMORY_AND_DISK) else source
+    val src = if (persist) source.persist(StorageLevel.MEMORY_AND_DISK) else source
     try withCommitRetry {
-      mergeBody(targetAlias, src, condition, matchedUpdate, notMatchedInsert,
+      mergeBody(targetAlias, src, persist, condition, matchedUpdate, notMatchedInsert,
         matchedDelete, deleteFirst, schemaEvolution)
-    } finally if (doPersist) src.unpersist(false)
+    } finally if (persist) src.unpersist(false)
   }
 
   /** Simple conjunctive equi-predicates `targetAlias.col = <srcExpr>`
@@ -1703,12 +1710,13 @@ class VersionedTable private (val spark: SparkSession,
 
   private def mergeBody(targetAlias: String,
                         src: DataFrame,
+                        sourcePersisted: Boolean,
                         condition: String,
                         matchedUpdate: Option[(Option[String], Map[String, String])],
                         notMatchedInsert: Option[(Option[String], Map[String, String])],
                         matchedDelete: Option[Option[String]],
                         deleteFirst: Boolean,
-                        schemaEvolution: Boolean): Unit = {
+                        schemaEvolution: Boolean): Map[String, String] = {
     val (pinnedV, files, baseSchema, partCols) = pinnedSnapshot()
     // Merge-time schema evolution (the reference's autoMerge case,
     // notes.md:102-105; Delta's spark.databricks.delta.schema.autoMerge):
@@ -1740,32 +1748,6 @@ class VersionedTable private (val spark: SparkSession,
       else StructType(baseSchema.fields ++ evolvedCols)
     val dataCols = tableSchema.fields.toSeq
 
-    // --- source persist: mergeBody evaluates the source 2-3 times (the
-    // stats/cardinality agg, the touched-file probe, then the rewrite or
-    // the insert anti-join). Re-evaluating a trivially-cheap source (a
-    // caller-cached staged batch) costs nothing, but SCD2 merge sources
-    // are typically a join/aggregate over the TARGET TABLE itself
-    // (HeaderEtlJob Phase A's first-change frame, ItemsEtlJob's staged
-    // union) — without a persist every evaluation replays a table scan
-    // plus a shuffle join (guide §1.2: remove redundant passes first).
-    // Guarded: only plans containing a join/aggregate/window/generate
-    // are persisted — a plain projection over the caller's cache would
-    // just double-cache the batch — and
-    // spark.graft.merge.persistSource=false turns it off.
-    val persistSource =
-      spark.conf.get("spark.graft.merge.persistSource", "true") != "false"
-    val srcExpensive = {
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, Window => LWindow}
-      src.queryExecution.optimizedPlan.exists {
-        case _: Join | _: Aggregate | _: LWindow | _: Generate => true
-        case _ => false
-      }
-    }
-    val srcPersisted = persistSource && srcExpensive &&
-      src.storageLevel == StorageLevel.NONE
-    val src2 = if (srcPersisted) src.persist(StorageLevel.MEMORY_AND_DISK) else src
-    try {
-
     // --- stats pruning + cardinality fast path: ONE source-side agg -----
     // For each conjunctive equi-key, the agg computes its min/max — files
     // whose footer stats don't overlap EVERY key range cannot contain
@@ -1778,9 +1760,11 @@ class VersionedTable private (val spark: SparkSession,
     // unnecessary (the common case — e.g. a deduped batch). Conservative
     // on every failure path: unknown shapes prune nothing and keep the
     // exact check.
-    val checkCardinality =
-      spark.conf.get("spark.graft.merge.checkCardinality", "true") != "false"
     val (pairs, pureEqui) = equiPairs(condition, targetAlias)
+    // no matched-update/delete clause (e.g. the header job's Phase B):
+    // the insert-only fast path below
+    val anyMatchedClause = matchedUpdate.isDefined || matchedDelete.isDefined
+    val insertOnly = !anyMatchedClause && notMatchedInsert.isDefined
     // ≤2 files: the min/max agg costs more than scanning them
     val wantStats = pairs.nonEmpty && files.size > 2
     // Key uniqueness FROM THE PLAN, before paying any job for it: a source
@@ -1821,7 +1805,7 @@ class VersionedTable private (val spark: SparkSession,
                 groupAttrs.forall(keys.contains)
             case _ => false
           }
-          val analyzed = src2.queryExecution.analyzed
+          val analyzed = src.queryExecution.analyzed
           // source-side key column names: parse each pair's source sql
           // (possibly alias-qualified / backquoted) back to its last part
           val keyNames = pairs.flatMap { case (_, sexpr) =>
@@ -1836,12 +1820,15 @@ class VersionedTable private (val spark: SparkSession,
             dig(analyzed, AttributeSet(keyAttrs))
         } catch { case scala.util.control.NonFatal(_) => false }
       }
-    // dup check only matters on the rewrite path (insert-only merges
-    // return before the probe and never rewrite matched rows)
-    val uniqueByPlan = checkCardinality && keysUniqueByPlan
-    val wantDupCheck = checkCardinality && !uniqueByPlan && pureEqui && pairs.nonEmpty &&
-      (matchedUpdate.isDefined || matchedDelete.isDefined)
-    val anyMatchedClause = matchedUpdate.isDefined || matchedDelete.isDefined
+    // cardinality only matters on the rewrite path (insert-only merges
+    // return before the probe and never rewrite matched rows). The path
+    // taken is recorded as `cardinalityCheck`: `none` (insert-only),
+    // `plan` (keys unique by plan), `measured` (the stats agg counted the
+    // distinct keys; duplicates fall through to the probe's exact check)
+    // or `probe` (exact per-target-row grouping in the probe only).
+    val uniqueByPlan = !insertOnly && keysUniqueByPlan
+    val wantDupCheck = anyMatchedClause && !uniqueByPlan && pureEqui && pairs.nonEmpty
+    var cardinalityCheck = if (insertOnly) "none" else if (uniqueByPlan) "plan" else "probe"
     var srcKeysUnique = uniqueByPlan
     val matchCandidates: Seq[FileEntry] =
       try {
@@ -1859,7 +1846,7 @@ class VersionedTable private (val spark: SparkSession,
             countDistinct(keyExprs.head, keyExprs.tail: _*).as("__graft_nd"))
           val aggs = statAggs ++ dupAggs
           val row = labeled("merge: source stats/cardinality agg") {
-            src2.agg(aggs.head, aggs.tail: _*).collect()(0)
+            src.agg(aggs.head, aggs.tail: _*).collect()(0)
           }
           if (wantDupCheck) {
             // rows with a NULL key can never equi-match a target row;
@@ -1868,6 +1855,7 @@ class VersionedTable private (val spark: SparkSession,
             val nn = if (row.isNullAt(statAggs.size)) 0L else row.getLong(statAggs.size)
             val nd = row.getLong(statAggs.size + 1)
             srcKeysUnique = nn == nd
+            cardinalityCheck = "measured"
           }
           if (!wantStats) files
           else pairs.zipWithIndex.foldLeft(files) { case (cand, ((tcol, _), i)) =>
@@ -1892,39 +1880,41 @@ class VersionedTable private (val spark: SparkSession,
     // conservatively stays un-hinted and Catalyst/AQE decides. Full-outer
     // rewrites (update+insert merges) are excluded below — broadcast hash
     // join does not support full-outer and the hint would be dead weight.
-    val bcastCapBytes = spark.conf.get(
-      "spark.graft.merge.broadcastSourceBytes",
-      (128L * 1024 * 1024).toString).toLong
-    // `src2.storageLevel != NONE`, NOT the local srcPersisted flag: the
-    // usual path persists expensive sources one frame up (executeMerge),
-    // which made the local flag false for exactly the sources the hint
-    // targets — the hint was dead code for every executeMerge-persisted
-    // source. LAZY: forced only inside maybeBroadcast, i.e. strictly
-    // after the stats/cardinality agg above ran its collect and filled
-    // the cache, so the InMemoryRelation stats read here are the exact
-    // materialized bytes (on the no-stats ≤2-file path the cache may be
-    // cold and this reads the estimate — a ≤2-file table is fixture
-    // scale, where either join strategy is fine).
-    lazy val srcSmall = src2.storageLevel != StorageLevel.NONE && (try {
-      src2.queryExecution.optimizedPlan.stats.sizeInBytes <= bcastCapBytes
+    // The cached state is read off the frame itself (a caller-persisted
+    // source qualifies too). LAZY: forced only inside maybeBroadcast,
+    // i.e. strictly after the stats/cardinality agg above ran its collect
+    // and filled the cache, so the InMemoryRelation stats read here are
+    // the exact materialized bytes (on the no-stats ≤2-file path the
+    // cache may be cold and this reads the estimate — a ≤2-file table is
+    // fixture scale, where either join strategy is fine). The stats come
+    // from a FRESH plan of the source: its own QueryExecution may have
+    // resolved its cached-data plan before the persist (executeMerge's
+    // guard does exactly that) and would never show the cache.
+    lazy val srcSmall = src.storageLevel != StorageLevel.NONE && (try {
+      spark.sessionState.executePlan(src.queryExecution.logical)
+        .optimizedPlan.stats.sizeInBytes <= MergeBroadcastBytes
     } catch { case scala.util.control.NonFatal(_) => false })
+    var sourceBroadcast = false
     def maybeBroadcast(df: DataFrame): DataFrame =
-      if (srcSmall) broadcast(df) else df
+      if (srcSmall) { sourceBroadcast = true; broadcast(df) } else df
+    def decisions = Map(
+      "sourcePersisted" -> sourcePersisted.toString,
+      "sourceBroadcast" -> sourceBroadcast.toString,
+      "cardinalityCheck" -> cardinalityCheck)
 
     // --- fast path: insert-only merge rewrites NOTHING ------------------
-    // With no matched-update/delete clause (e.g. the header job's Phase
-    // B), matched target rows are untouched by definition — the merge
+    // Matched target rows are untouched by definition, so the merge
     // reduces to appending the source rows that match no target row: one
     // left-anti join + write of new files. No touched-file collect, no
     // full-outer rewrite of files whose rows would only be copied.
     // (At 10M rows this halves the merge phase; Delta special-cases
     // insert-only merges the same way.)
-    if (!anyMatchedClause && notMatchedInsert.isDefined) {
+    if (insertOnly) {
       val (insCondOpt, insVals) = notMatchedInsert.get
       // anti-join only against the stats-candidate files: rows in skipped
       // files cannot equal any source key, so they cannot absorb inserts
       val target = readFileEntries(matchCandidates, tableSchema).alias(targetAlias)
-      val unmatched = src2.join(target, expr(condition), "left_anti")
+      val unmatched = src.join(target, expr(condition), "left_anti")
       val toInsert = insCondOpt.fold(unmatched)(c => unmatched.filter(expr(c)))
       val rows = toInsert.select(dataCols.map { f =>
         insVals.get(f.name).map(expr).getOrElse(lit(null))
@@ -1937,19 +1927,16 @@ class VersionedTable private (val spark: SparkSession,
       // callers never need a post-merge table scan for accounting
       val inserted =
         if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L
-      commitOrClean(LogEntry(pinnedV + 1, now(), "MERGE",
-        tableSchema.json, partCols, added, Seq.empty,
-        Map(
-          "numTargetFilesAdded" -> added.size.toString,
-          "numTargetFilesRemoved" -> "0",
-          "numTargetFilesUntouched" -> files.size.toString,
-          "numTargetFilesSkippedByStats" -> statsSkipped.toString,
-          "numTargetRowsUpdated" -> "0",
-          "numTargetRowsDeleted" -> "0",
-          "numTargetRowsInserted" -> inserted.toString,
-          "numColumnsEvolved" -> evolvedCols.size.toString,
-          "insertOnly" -> "true")), added)
-      return
+      return commitMerge(pinnedV, tableSchema, partCols, added, Seq.empty, Map(
+        "numTargetFilesAdded" -> added.size.toString,
+        "numTargetFilesRemoved" -> "0",
+        "numTargetFilesUntouched" -> files.size.toString,
+        "numTargetFilesSkippedByStats" -> statsSkipped.toString,
+        "numTargetRowsUpdated" -> "0",
+        "numTargetRowsDeleted" -> "0",
+        "numTargetRowsInserted" -> inserted.toString,
+        "numColumnsEvolved" -> evolvedCols.size.toString,
+        "insertOnly" -> "true") ++ decisions)
     }
 
     // --- 1. prune + cardinality, ONE job: which existing files contain
@@ -1964,7 +1951,7 @@ class VersionedTable private (val spark: SparkSession,
     // collect is bounded by file count, never by row count. Catalyst/AQE
     // picks the join strategy — the source side of a batch merge is
     // typically small enough to broadcast.
-    val needExactCardinality = checkCardinality && !srcKeysUnique
+    val needExactCardinality = !srcKeysUnique
     val qualify = files.map(fe =>
       fs.makeQualified(new Path(dataDir, fe.path)).toString -> fe.path).toMap
     val knownRel = files.map(_.path).toSet
@@ -1977,7 +1964,7 @@ class VersionedTable private (val spark: SparkSession,
         // it now: after a DV anti-join, _metadata no longer resolves)
         val t = readFileEntries(matchCandidates, tableSchema, keepMeta = true)
           .alias(targetAlias)
-        val matched = t.join(maybeBroadcast(src2), expr(condition), "inner")
+        val matched = t.join(maybeBroadcast(src), expr(condition), "inner")
         if (needExactCardinality) {
           val perFile = labeled("merge: touched-file probe + cardinality") {
             matched
@@ -2015,7 +2002,7 @@ class VersionedTable private (val spark: SparkSession,
     // sort-merge join (guide §2.4/§3.1).
     val rewriteJoinType = if (notMatchedInsert.isEmpty) "left_outer" else "full_outer"
     val t = touchedDF.withColumn(TPresent, lit(true)).alias(targetAlias)
-    val s = (if (rewriteJoinType == "left_outer") maybeBroadcast(src2) else src2)
+    val s = (if (rewriteJoinType == "left_outer") maybeBroadcast(src) else src)
       .withColumn(SPresent, lit(true))
     val joined = t.join(s, expr(condition), rewriteJoinType)
 
@@ -2083,32 +2070,6 @@ class VersionedTable private (val spark: SparkSession,
     }
     val rewritten = kept.select(outCols: _*)
 
-    // plan-audit hook: when spark.graft.merge.explainDir is set, dump the
-    // rewrite join's formatted physical plan there (one file per merge,
-    // named by target + version) so optimization claims about the merge's
-    // internal plan shape (join strategy, exchange count, cached source)
-    // are checkable — the merge plan never appears in any returned frame.
-    spark.conf.getOption("spark.graft.merge.explainDir").foreach { d =>
-      try {
-        val name = rootPath.getName + s"_v${pinnedV + 1}_rewrite.txt"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-        // header line: the measured-size broadcast decision's inputs, so
-        // a dump where the hint did NOT flip the join is self-explaining
-        // (un-persisted source vs size over cap vs estimate already fired)
-        val srcBytes =
-          try src2.queryExecution.optimizedPlan.stats.sizeInBytes.toString
-          catch { case scala.util.control.NonFatal(_) => "?" }
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(d, name),
-          s"-- merge source: cached=${src2.storageLevel != StorageLevel.NONE}" +
-            s" sizeInBytes=$srcBytes" +
-            s" capBytes=$bcastCapBytes hinted=$srcSmall" +
-            s" rewriteJoinType=$rewriteJoinType\n" +
-          rewritten.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-      } catch { case scala.util.control.NonFatal(_) => }
-    }
-
     val doWrite = touchedFiles.nonEmpty || notMatchedInsert.nonEmpty
     val added =
       if (doWrite) labeled("merge: rewrite + write") {
@@ -2135,19 +2096,26 @@ class VersionedTable private (val spark: SparkSession,
         (cnt("u"), cnt("i"), deleted)
       } else (0L, 0L, 0L)
 
-    commitOrClean(LogEntry(pinnedV + 1, now(), "MERGE",
-      tableSchema.json, partCols,
-      added, touchedFiles.map(_.path),
-      Map(
-        "numTargetFilesAdded" -> added.size.toString,
-        "numTargetFilesRemoved" -> touchedFiles.size.toString,
-        "numTargetFilesUntouched" -> untouched.size.toString,
-        "numTargetFilesSkippedByStats" -> statsSkipped.toString,
-        "numTargetRowsUpdated" -> rowsUpdated.toString,
-        "numTargetRowsInserted" -> rowsInserted.toString,
-        "numTargetRowsDeleted" -> rowsDeleted.toString,
-        "numColumnsEvolved" -> evolvedCols.size.toString)), added)
-    } finally if (srcPersisted) src2.unpersist(false)
+    commitMerge(pinnedV, tableSchema, partCols, added, touchedFiles.map(_.path), Map(
+      "numTargetFilesAdded" -> added.size.toString,
+      "numTargetFilesRemoved" -> touchedFiles.size.toString,
+      "numTargetFilesUntouched" -> untouched.size.toString,
+      "numTargetFilesSkippedByStats" -> statsSkipped.toString,
+      "numTargetRowsUpdated" -> rowsUpdated.toString,
+      "numTargetRowsInserted" -> rowsInserted.toString,
+      "numTargetRowsDeleted" -> rowsDeleted.toString,
+      "numColumnsEvolved" -> evolvedCols.size.toString,
+      "rewriteJoinType" -> rewriteJoinType) ++ decisions)
+  }
+
+  /** Publish one MERGE commit (pinned to `pinnedV + 1`) and hand its
+    * operation metrics back to the caller. */
+  private def commitMerge(pinnedV: Long, tableSchema: StructType, partCols: Seq[String],
+                          added: Seq[FileEntry], removed: Seq[String],
+                          metrics: Map[String, String]): Map[String, String] = {
+    commitOrClean(LogEntry(pinnedV + 1, now(), "MERGE", tableSchema.json, partCols,
+      added, removed, metrics), added)
+    metrics
   }
 
   // ------------------------------------------------------------- helpers --
@@ -2235,6 +2203,9 @@ object VersionedTable {
   private val DvSchema = StructType(Seq(
     StructField("file", StringType, nullable = false),
     StructField("row_idx", LongType, nullable = false)))
+  /** Materialized source size up to which a merge broadcasts its source
+    * into the probe and left-outer rewrite joins. */
+  private val MergeBroadcastBytes = 128L * 1024 * 1024
   private val TPresent = "__graft_t_present"
   private val SPresent = "__graft_s_present"
   private implicit val fmts: Formats = DefaultFormats
@@ -2395,15 +2366,16 @@ object VersionedTable {
   }
 }
 
-/** Fluent MERGE builder mirroring the subset of the Delta API the
-  * reference exercises: at most one whenMatchedUpdate and one
-  * whenNotMatchedInsert clause, conditions and assignments as SQL
-  * expression strings over the target/source aliases. */
 /** A commit lost the version compare-and-swap to a concurrent writer:
   * the table state is untouched by the loser; re-read and retry.
   * Subclasses IllegalStateException so pre-CAS callers keep working. */
 class ConcurrentCommitException(msg: String) extends IllegalStateException(msg)
 
+/** Fluent MERGE builder mirroring the subset of the Delta API the
+  * reference exercises: at most one whenMatchedUpdate, one
+  * whenMatchedDelete and one whenNotMatchedInsert clause, conditions and
+  * assignments as SQL expression strings over the target/source aliases.
+  * [[execute]] returns the commit's operation metrics. */
 class MergeBuilder private[tables] (table: VersionedTable,
                                     targetAlias: String,
                                     source: DataFrame,
@@ -2450,7 +2422,9 @@ class MergeBuilder private[tables] (table: VersionedTable,
     * is the contract). */
   def withSchemaEvolution(): MergeBuilder = { schemaEvolution = true; this }
 
-  def execute(): Unit =
+  /** Runs the merge; returns the `operationMetrics` its commit recorded
+    * (the same map `history()` shows for that version). */
+  def execute(): Map[String, String] =
     table.executeMerge(targetAlias, source, condition, matchedUpdate,
       notMatchedInsert, matchedDelete, deleteFirst, schemaEvolution)
 }

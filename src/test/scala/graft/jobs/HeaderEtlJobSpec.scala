@@ -168,4 +168,22 @@ class HeaderEtlJobSpec extends AnyFunSuite {
     val metricsDirs = new java.io.File(metricsPath).list()
     assert(metricsDirs != null && metricsDirs.nonEmpty)
   }
+
+  test("merge decisions: Phase A persists its aggregate source, Phase B replays the cached batch") {
+    import spark.implicits._
+    val merges = VersionedTable.forPath(spark, tablePath).history()
+      .filter(col("operation") === "MERGE").select("operationMetrics")
+      .as[Map[String, String]].collect().toSeq
+    val (phaseB, phaseA) = merges.partition(_.get("insertOnly").contains("true"))
+    assert(phaseA.nonEmpty && phaseA.size == phaseB.size)
+    phaseA.foreach { m =>
+      assert(m("sourcePersisted") == "true")
+      assert(m("cardinalityCheck") == "plan")
+      assert(m("rewriteJoinType") == "left_outer")
+    }
+    phaseB.foreach { m =>
+      assert(m("sourcePersisted") == "false")
+      assert(m("cardinalityCheck") == "none")
+    }
+  }
 }

@@ -141,4 +141,17 @@ class ItemsEtlJobSpec extends AnyFunSuite {
     // NULL <> 200.00 is NULL → not a change → still a single open version
     assert(df.filter(col("contratto_cod") === "Y5").count() == 1)
   }
+
+  test("merge decisions: the staged-union source is persisted and rewritten full-outer") {
+    import spark.implicits._
+    val merges = VersionedTable.forPath(spark, tablePath).history()
+      .filter(col("operation") === "MERGE").select("operationMetrics")
+      .as[Map[String, String]].collect().toSeq
+    assert(merges.nonEmpty)
+    merges.foreach { m =>
+      assert(m("sourcePersisted") == "true")
+      assert(m("cardinalityCheck") == "measured")
+      assert(m("rewriteJoinType") == "full_outer")
+    }
+  }
 }
